@@ -21,6 +21,30 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from dq_true_north_spark import queries as _Q  # noqa: E402
+from dq_true_north_spark.textquality.index_cache import cache_root  # noqa: E402
+
+
+def _package_zip() -> str:
+    """Zip the package's .py files into the user-owned 0700 cache root of
+    textquality/index_cache.py: no other user can pre-create or swap the
+    file, and each writer fills a unique temp file and os.replace()s it
+    into place, so concurrent processes never see a partial zip."""
+    root = cache_root()
+    zpath = os.path.join(root, "dq_true_north_spark_pkg.zip")
+    fd, tmp = tempfile.mkstemp(dir=root, suffix=".zip.tmp")
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+            pkg_dir = os.path.join(_REPO, "dq_true_north_spark")
+            for dirpath, _, files in os.walk(pkg_dir):
+                for name in files:
+                    if name.endswith(".py"):
+                        full = os.path.join(dirpath, name)
+                        z.write(full, os.path.relpath(full, _REPO))
+        os.replace(tmp, zpath)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return zpath
 
 
 def _ensure_shipped(spark: SparkSession) -> None:
@@ -31,14 +55,7 @@ def _ensure_shipped(spark: SparkSession) -> None:
     shipped = getattr(_ensure_shipped, "_ids", set())
     if id(ctx) in shipped:
         return
-    pkg_dir = os.path.join(_REPO, "dq_true_north_spark")
-    zpath = os.path.join(tempfile.gettempdir(), "dq_true_north_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
+    zpath = _package_zip()
     try:
         ctx.addPyFile(zpath)
     except Exception:

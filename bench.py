@@ -58,6 +58,18 @@ def materialize(df) -> int:
     return row["n"]
 
 
+def corpus_parquet(spark, n_pages: int, cpus: str):
+    """The bench corpus, written once to .data/pages_N (untimed). A
+    directory without Spark's _SUCCESS commit marker is a killed write and
+    is regenerated, never read as a partial corpus."""
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), ".data", f"pages_{n_pages}"
+    )
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        pages_df(spark, n_pages, int(cpus)).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -79,13 +91,7 @@ def main() -> None:
     # materialize the corpus to parquet once (untimed — stands in for the
     # Iceberg table the production pipeline reads; generation is not the
     # system under test)
-    n_pages = n_pages_for_sf(sf_dir)
-    pages_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".data", f"pages_{n_pages}"
-    )
-    if not os.path.isdir(pages_path):
-        pages_df(spark, n_pages, int(cpus)).write.mode("overwrite").parquet(pages_path)
-    pages = spark.read.parquet(pages_path)
+    pages = corpus_parquet(spark, n_pages_for_sf(sf_dir), cpus)
 
     # the dedup-strategy sketch is a once-per-corpus decision in production;
     # time it once as its own line item, then run the pipeline with the
@@ -131,10 +137,10 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
 
-    # star contraction on a planted 10k-node CHAIN — the label-propagation
-    # worst case (diameter = 10k would need 10k propagation rounds); the
-    # alternating large/small-star O(log n) bound is MEASURED here, not
-    # asserted: rounds lands in the JSON (VERDICT r3 next #7; ~15 expected)
+    # star contraction on a planted 10k-node CHAIN — diameter 10k, the
+    # worst shape for any O(diameter) algorithm; the alternating
+    # large/small-star O(log n) bound is MEASURED here, not asserted:
+    # rounds lands in the JSON (VERDICT r3 next #7; ~15 expected)
     from dq_true_north_spark.textquality.dedup import star_contract_clusters
 
     chain = spark.createDataFrame(

@@ -74,14 +74,7 @@ def main() -> None:
             import bench as B
             from dq_true_north_spark.corpus import n_pages_for_sf
 
-            n_pages = n_pages_for_sf(sf_dir)
-            pages_path = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), ".data",
-                f"pages_{n_pages}")
-            if not os.path.isdir(pages_path):
-                pages_df(spark, n_pages, int(cpus)).write.mode(
-                    "overwrite").parquet(pages_path)
-            pages = spark.read.parquet(pages_path)
+            pages = B.corpus_parquet(spark, n_pages_for_sf(sf_dir), cpus)
 
             def fn(spark, sf_dir, _p=pages):
                 return compute_verdicts(_p, dedup_strategy="broadcast")

@@ -94,7 +94,7 @@ def run(cores: int, cpu_list: str, pages: str) -> dict:
 
 
 def _ensure_corpus(path: str, n: int) -> None:
-    if not os.path.isdir(path):
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         subprocess.run(
             [sys.executable, "-c", _PREP.format(repo=REPO, n=n, pages=path)],
             check=True, timeout=1800,

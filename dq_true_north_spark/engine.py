@@ -143,10 +143,13 @@ def run_catalog(
     # shared InMemoryRelation and every later rule reads it. The round-5
     # design ran blocking count() jobs per source before any rule could
     # start; round-6 measurement: that warm phase sat on the critical path
-    # and cost more than it saved at bench scale (3.3 s -> 2.7 s without),
-    # while lazy marking keeps the at-scale property that 6 rules over one
-    # source pay ~one scan, not six (two rules racing the first
-    # materialization at worst duplicate that one scan, never all six).
+    # and cost more than it saved at bench scale (3.3 s -> 2.7 s without).
+    # Dispatch is ONE wave (pool up to 16 threads), so every rule sharing a
+    # source can race the first materialization at once. Spark's per-block
+    # write lock bounds the damage: a racer that reaches a cached partition
+    # while another thread is writing it waits and reads the block, so
+    # duplicated work is limited to partitions two racers start at the same
+    # moment; the worst case is the uncached cost (one scan per racer).
     for tbl in sources:
         try:
             spark.catalog.cacheTable(tbl)

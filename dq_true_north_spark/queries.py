@@ -1679,9 +1679,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @df_query("near_dup_clusters_pages")
-def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_near_dup_clusters_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate cluster formation: MinHash LSH pairs → connected
-    components (min-label propagation) → (doc, cluster_id, is_representative).
+    components (star contraction) → (doc, cluster_id, is_representative).
     The step between pair generation and actually dropping duplicates —
     keep-one-per-cluster with the same min-key tie-break as exact dedup.
     Although the Spark algorithm is iterative, its OUTPUT is a pure
@@ -1692,23 +1692,17 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .corpus import n_pages_for_sf, pages_df
-    from .textquality.dedup import minhash_candidate_pairs, near_dup_clusters
+    from .textquality.dedup import (
+        minhash_candidate_pairs,
+        star_contract_clusters,
+    )
 
     pages = pages_df(spark, min(n_pages_for_sf(sf_dir), 10_000))
     pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text")
-    return near_dup_clusters(pairs).select(
+    return star_contract_clusters(pairs).select(
         "doc", "cluster_id",
         (F.col("doc") == F.col("cluster_id")).cast("int").alias("is_representative"),
     )
-
-
-# near_dup_clusters_star_pages is deliberately NOT a registry entry: star
-# contraction produces output pinned IDENTICAL to near_dup_clusters_pages
-# (tests/test_dedup_similarity.py asserts equality against label propagation
-# AND a union-find reference), so a second rows-only driver entry added no
-# evidence while consuming a CORRECTNESS-window slot (VERDICT r3 wrong #1).
-# The algorithm stays first-class: keep_representatives(algorithm="star"),
-# the chain-convergence bench entry in bench.py, and the parity tests.
 
 
 # bump when ivf_write_index's layout or training parameters change — part

@@ -501,12 +501,12 @@ def losers_broadcastable(n_losers: int, n_total: int) -> bool:
 
 
 class _iter_loop_conf:
-    """Scale-adaptive shuffle sizing for the iterative graph loops.
+    """Scale-adaptive shuffle sizing for the star-contraction loop.
 
-    Every round of label propagation / star contraction runs 3-5 tiny
-    exchanges; with the session's cluster-sized shuffle.partitions and
-    AQE's per-stage replanning, the scheduler — not data — dominates each
-    round (guide §2.2: size partitions to the data, never a constant).
+    Every star-contraction round runs 3-5 tiny exchanges; with the
+    session's cluster-sized shuffle.partitions and AQE's per-stage
+    replanning, the scheduler — not data — dominates each round (guide
+    §2.2: size partitions to the data, never a constant).
     On entry: partitions = ceil(n_rows / 25k) clamped to [2, session
     setting] — the measured sweet spot at bench scale, and past ~3.2M rows
     the clamp returns the session value so a real corpus keeps its
@@ -557,10 +557,11 @@ def _large_star(edges: DataFrame) -> DataFrame:
     Round-6 trims (output-identical; each exchange/scan is a whole extra
     stage per iteration and the loop is scheduler-bound at small sizes):
     `sym` explodes both orientations from ONE scan of the edge set instead
-    of a self-union, and the trailing distinct() is gone — _small_star
-    groups/aggregates per key and ends in its own distinct(), so duplicate
-    large-star rows cannot change the round's result, only its
-    intermediate size (bounded by 2x the input edge multiset)."""
+    of a self-union, and the trailing distinct() is gone — _small_star_raw
+    groups/aggregates per key and the loop's (hi, lo) aggregation dedups
+    its output, so duplicate large-star rows cannot change the round's
+    result, only its intermediate size (bounded by 2x the input edge
+    multiset)."""
     sym = edges.select(
         F.explode(
             F.array(
@@ -595,29 +596,25 @@ def _small_star_raw(edges: DataFrame) -> DataFrame:
     return rewired.union(kept)
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round (distinct output) — kept as the readable spec of
-    one contraction step."""
-    return _small_star_raw(edges).distinct()
-
-
 def star_contract_clusters(pairs: DataFrame, max_rounds: int = 20,
                            stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction — O(log n) rounds on ANY graph shape, vs O(diameter) for
-    label propagation. This is the 10^12-doc path the label-propagation
-    docstring promised: a 10^6-long chain converges in ~20 rounds here
-    where propagation would need 10^6.
+    """Connected components over candidate pairs → (doc, cluster_id), with
+    cluster_id = the lexicographically smallest member (the keep-first
+    representative, same tie-break discipline as exact dedup). The one
+    cluster algorithm: every near-dup path (keep_representatives,
+    near_dup_clusters_pages) runs through here.
 
-    At convergence the edge set is a union of stars, every member pointing
-    DIRECTLY at its component's minimum node; labels read straight off the
-    final edges. Same output contract as near_dup_clusters:
-    (doc, cluster_id), cluster_id = lexicographically smallest member.
+    Input: pairs(doc_a, doc_b) from minhash_candidate_pairs /
+    simhash_near_pairs. Algorithm: alternating large-star/small-star
+    contraction — O(log n) rounds on ANY graph shape, not O(diameter): a
+    10^6-long chain converges in ~20 rounds. At convergence the edge set
+    is a union of stars, every member pointing DIRECTLY at its component's
+    minimum node; labels read straight off the final edges.
+
     Convergence is CHECKED (set-difference, not a count heuristic) and
     raises if max_rounds was hit while edges still moved. Pass `stats` to
     receive {'rounds': n} — the O(log n) claim is measured, not asserted
-    (bench.py times a planted 10k-node chain, the label-propagation
-    worst case, through here)."""
+    (bench.py times a planted 10k-node chain through here)."""
     edges = _canonical_edges(pairs).localCheckpoint(eager=True)
     spark = pairs.sparkSession
     with _iter_loop_conf(spark, edges.count()):
@@ -665,134 +662,32 @@ def star_contract_clusters(pairs: DataFrame, max_rounds: int = 20,
     )
 
 
-def near_dup_clusters(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
-    """Connected components over candidate pairs → (doc, cluster_id), with
-    cluster_id = the lexicographically smallest member (the keep-first
-    representative, same tie-break discipline as exact dedup).
-
-    Input: pairs(doc_a, doc_b) from minhash_candidate_pairs /
-    simhash_near_pairs. Algorithm: iterative min-label propagation — each
-    round every node takes the min label among itself and its neighbors
-    (one symmetric-edge join + one groupBy per round), until a fixpoint.
-    Rounds needed = component diameter; LSH components are near-cliques
-    (every member shared a bucket with the seed), so diameter is tiny by
-    construction — max_iters=10 covers pathological chains; convergence is
-    CHECKED, not assumed (raises if the cap was hit while still moving,
-    mirroring the capped-bucket honesty rule). For long-chain / unknown-
-    diameter graphs use `star_contract_clusters` above — the alternating
-    large-star/small-star contraction (O(log n) rounds on any shape), same
-    output contract, tested equal to a union-find reference.
-
-    Lineage is cut with localCheckpoint each round: an iterative join loop
-    otherwise compounds the logical plan and re-executes round 1 at round k.
-    """
-    # ONE evaluation of the pairs plan: the symmetric edge set comes from a
-    # per-row explode of both orientations, not a self-union — union(pairs,
-    # pairs.swapped) evaluated the (expensive: generation + signatures +
-    # LSH) pairs subtree twice inside the same job (round-6 plan audit)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc"))
-        .localCheckpoint(eager=True)
-    )
-    spark = pairs.sparkSession
-    with _iter_loop_conf(spark, edges.count()):
-        moved = -1   # bound even when max_iters <= 0
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc)
-                .groupBy(F.col("src").alias("doc"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
-            )
-            new_label = F.least(
-                F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
-            )
-            # the convergence flag rides INSIDE the checkpointed frame, so
-            # the moved-count is a cheap filter over already-materialized
-            # rows — not a second labels-vs-updated join job per round
-            # (select exprs resolve against the INPUT frame, so aliasing
-            # the new value as cluster_id cannot shadow the old column it
-            # compares against)
-            updated = (
-                labels.join(neighbor_min, "doc", "left")
-                .select(
-                    "doc",
-                    new_label.alias("cluster_id"),
-                    (new_label != F.col("cluster_id")).alias("__changed"),
-                )
-                # LAZY: the moved-count below materializes the checkpoint
-                # in the same job (eager=True was a second job per round)
-                .localCheckpoint(eager=False)
-            )
-            moved = updated.filter(F.col("__changed")).count()
-            labels = updated.drop("__changed")
-            if moved == 0:
-                return labels
-    raise RuntimeError(
-        f"near_dup_clusters did not converge in {max_iters} rounds "
-        f"({moved} labels still moving) — raise max_iters or use "
-        "star contraction for long-chain graphs"
-    )
-
-
 def keep_representatives(df: DataFrame, pairs: DataFrame,
                          id_col: str = "url",
-                         broadcast_losers: bool | None = None,
-                         n_total: int | None = None,
-                         algorithm: str = "label") -> DataFrame:
+                         algorithm: str = "star") -> DataFrame:
     """Drop every near-duplicate except its cluster representative (the
     min-id member). Docs in no pair are kept.
 
-    broadcast_losers=None (default) is ADAPTIVE — the same 10% rule as the
-    pipeline's exact dedup (pipeline.BROADCAST_DUP_FRACTION_MAX): the loser
-    fraction is measured and the loser set is broadcast only below the
-    threshold. On mirror-heavy corpora the loser set is proportional to the
-    corpus and an unconditional broadcast OOMs the executors (the round-1
-    exact-dedup lesson; VERDICT r2 #4) — those fall through to a keys-only
-    sort-merge anti-join. Cost of measuring: losers.count() is a cheap
-    re-read (the cluster labels are localCheckpointed); the corpus size is
-    a count() whose plan prunes every column (UDF projections included) —
-    still, pass n_total when the caller already knows it (a pipeline that
-    counted its input), or pin True/False when the dup fraction is known
-    out-of-band.
+    Clusters come from star_contract_clusters. The join strategy is
+    derived from the data by the pipeline's exact-dedup 10% rule
+    (losers_broadcastable): the loser set is broadcast only when it is at
+    most BROADCAST_DUP_FRACTION_MAX of the corpus. On mirror-heavy corpora
+    the loser set is proportional to the corpus and a broadcast OOMs the
+    executors (VERDICT r2 #4), so those take a keys-only sort-merge
+    anti-join. Cost of measuring: losers.count() re-reads the checkpointed
+    star edges, and df.count() prunes every column (UDF projections
+    included).
 
-    algorithm: 'label' (default — min-label propagation, right for the
-    near-clique graphs LSH pairs produce) or 'star' (large/small-star
-    contraction, O(log n) rounds for unknown-diameter graphs); the two are
-    tested output-identical."""
-    algorithms = {"label": near_dup_clusters, "star": star_contract_clusters}
-    if algorithm not in algorithms:
-        raise ValueError(
-            f"algorithm must be one of {sorted(algorithms)}, got {algorithm!r}"
-        )
-    cluster_fn = algorithms[algorithm]
+    algorithm: only "star" is accepted; the keyword stays so callers that
+    name the algorithm keep working."""
+    if algorithm != "star":
+        raise ValueError(f"algorithm must be 'star', got {algorithm!r}")
     losers = (
-        cluster_fn(pairs)
+        star_contract_clusters(pairs)
         .filter(F.col("doc") != F.col("cluster_id"))
         .select(F.col("doc").alias(id_col))
     )
-    if broadcast_losers is None:
-        if n_total is None:
-            n_total = df.count()
-        broadcast_losers = losers_broadcastable(losers.count(), n_total)
-    if broadcast_losers:
+    n_total = df.count()
+    if losers_broadcastable(losers.count(), n_total):
         losers = F.broadcast(losers)
     return df.join(losers, [id_col], "left_anti")

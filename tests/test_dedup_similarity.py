@@ -222,14 +222,15 @@ def test_near_dup_clusters_chain_and_representatives(spark):
     keep_representatives."""
     from dq_true_north_spark.textquality.dedup import (
         keep_representatives,
-        near_dup_clusters,
+        star_contract_clusters,
     )
 
     pairs = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")],
         "doc_a string, doc_b string",
     )
-    got = {r["doc"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    got = {r["doc"]: r["cluster_id"]
+           for r in star_contract_clusters(pairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
     docs = spark.createDataFrame(
@@ -247,13 +248,14 @@ def test_near_dup_clusters_on_planted_corpus(spark):
 
     from dq_true_north_spark.textquality.dedup import (
         keep_representatives,
-        near_dup_clusters,
+        star_contract_clusters,
     )
 
     n = 600
     pages = pages_df(spark, n, partitions=4)
     pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text")
-    labels = {r["doc"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    labels = {r["doc"]: r["cluster_id"]
+              for r in star_contract_clusters(pairs).collect()}
 
     def idx(url):
         return int(re.search(r"page-(\d+)\.html", url).group(1))
@@ -295,59 +297,77 @@ def test_ann_ivf_recall_vs_bruteforce(spark):
     emb.unpersist()
 
 
+def _union_find_labels(edges):
+    """Driver-side union-find reference: doc -> min member of its
+    connected component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comp = {}
+    for x in list(parent):
+        comp.setdefault(find(x), set()).add(x)
+    return {x: min(m) for m in comp.values() for x in m}
+
+
 def test_near_dup_clusters_matches_union_find_reference(spark):
-    """min-label propagation == driver-side union-find on seeded random
-    graphs (including long chains that need several rounds)."""
+    """The near-dup cluster labels (star contraction) == driver-side
+    union-find on seeded random graphs, each with an 8-node chain
+    appended."""
     import random
 
-    from dq_true_north_spark.textquality.dedup import near_dup_clusters
-
-    def union_find_labels(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # label = min member of the component
-        comp = {}
-        for x in list(parent):
-            comp.setdefault(find(x), set()).add(x)
-        return {x: min(m) for r, m in comp.items() for x in m}
+    from dq_true_north_spark.textquality.dedup import star_contract_clusters
 
     for seed in (1, 2, 3):
         rng = random.Random(seed)
         nodes = [f"n{i:03d}" for i in range(40)]
         edges = {tuple(sorted(rng.sample(nodes, 2))) for _ in range(30)}
-        # plus a deliberate 8-node chain (worst case for label propagation)
         chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(8)]
         all_edges = sorted(edges) + chain
-        expected = union_find_labels(all_edges)
+        expected = _union_find_labels(all_edges)
         pairs = spark.createDataFrame(all_edges, "doc_a string, doc_b string")
         got = {r["doc"]: r["cluster_id"]
-               for r in near_dup_clusters(pairs, max_iters=15).collect()}
+               for r in star_contract_clusters(pairs).collect()}
         assert got == expected, f"seed {seed}"
 
 
-def test_keep_representatives_join_strategies_agree(spark):
+def _kept_and_broadcast(docs, pairs):
+    """keep_representatives' kept url set, and whether its data-derived
+    join rule put a broadcast hint on the loser set."""
     from dq_true_north_spark.textquality.dedup import keep_representatives
 
+    kept = keep_representatives(docs, pairs)
+    analyzed = kept._jdf.queryExecution().analyzed().toString()
+    return {r["url"] for r in kept.collect()}, "strategy=broadcast" in analyzed
+
+
+def test_keep_representatives_join_strategies_agree(spark):
+    """One pair graph (chain b-a-c plus x-y: losers b, c, y) under both
+    join strategies the 10% rule can pick: over 6 docs the losers are 50%
+    and sort-merge; over 100 docs they are 3% and broadcast. The kept set
+    is the same explicit answer either way."""
     pairs = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
     )
-    docs = spark.createDataFrame(
+    few = spark.createDataFrame(
         [(u, u) for u in "abcxyz"], "url string, text string"
     )
-    kb = {r["url"] for r in keep_representatives(docs, pairs, broadcast_losers=True).collect()}
-    ka = {r["url"] for r in keep_representatives(docs, pairs, broadcast_losers=False).collect()}
-    assert kb == ka == {"a", "x", "z"}
+    assert _kept_and_broadcast(few, pairs) == ({"a", "x", "z"}, False)
+
+    urls = list("abcxyz") + [f"p{i:02d}" for i in range(94)]
+    many = spark.createDataFrame([(u, u) for u in urls],
+                                 "url string, text string")
+    assert _kept_and_broadcast(many, pairs) == (
+        set(urls) - {"b", "c", "y"}, True)
 
 
 def test_media_transform_plumbing_isolates_unsupported(spark):
@@ -380,14 +400,11 @@ def test_media_transform_plumbing_isolates_unsupported(spark):
 
 
 def test_keep_representatives_auto_strategy(spark):
-    """broadcast_losers=None applies the exact-dedup 10% rule (VERDICT r2
-    #4): the decision function flips at BROADCAST_DUP_FRACTION_MAX, and the
-    auto path returns the same rows as either pinned strategy in both the
-    low-dup and mirror-heavy regimes."""
-    from dq_true_north_spark.textquality.dedup import (
-        keep_representatives,
-        losers_broadcastable,
-    )
+    """The exact-dedup 10% rule (VERDICT r2 #4) flips at
+    BROADCAST_DUP_FRACTION_MAX, and keep_representatives applies it to the
+    measured loser fraction: the low-dup corpus broadcasts, the
+    mirror-heavy one sort-merges, and both return the explicit kept set."""
+    from dq_true_north_spark.textquality.dedup import losers_broadcastable
     from dq_true_north_spark.textquality.pipeline import (
         BROADCAST_DUP_FRACTION_MAX,
     )
@@ -399,29 +416,22 @@ def test_keep_representatives_auto_strategy(spark):
     assert losers_broadcastable(thr, 100)         # boundary inclusive
     assert not losers_broadcastable(thr + 1, 100)
 
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    docs = spark.createDataFrame(
+        [(c, c) for c in letters], "url string, text string"
+    )
     # low-dup corpus: 2 losers of 26 docs
     low_pairs = spark.createDataFrame(
         [("b", "a"), ("x", "y")], "doc_a string, doc_b string"
     )
-    docs = spark.createDataFrame(
-        [(f"{c}", f"{c}") for c in "abcdefghijklmnopqrstuvwxyz"],
-        "url string, text string",
-    )
-    want_low = {r["url"] for r in
-                keep_representatives(docs, low_pairs, broadcast_losers=True).collect()}
-    got_low = {r["url"] for r in
-               keep_representatives(docs, low_pairs).collect()}
-    assert got_low == want_low
+    assert _kept_and_broadcast(docs, low_pairs) == (
+        set(letters) - {"b", "y"}, True)
 
     # mirror-heavy corpus: one giant cluster, 25 of 26 docs are losers
     hi_pairs = spark.createDataFrame(
-        [("a", f"{c}") for c in "bcdefghijklmnopqrstuvwxyz"],
-        "doc_a string, doc_b string",
+        [("a", c) for c in letters[1:]], "doc_a string, doc_b string"
     )
-    want_hi = {r["url"] for r in
-               keep_representatives(docs, hi_pairs, broadcast_losers=False).collect()}
-    got_hi = {r["url"] for r in keep_representatives(docs, hi_pairs).collect()}
-    assert got_hi == want_hi == {"a"}
+    assert _kept_and_broadcast(docs, hi_pairs) == ({"a"}, False)
 
 
 def test_lsh_pairs_never_emit_self_pairs(spark):
@@ -522,42 +532,20 @@ def test_gif_frame_count_codec_free(spark):
 
 def test_star_contraction_matches_union_find_and_handles_long_chains(spark):
     """Alternating large-star/small-star == driver-side union-find on
-    seeded random graphs AND on a 200-node chain (diameter 200) that
-    min-label propagation could never finish in its round budget —
-    the documented 10^12-doc upgrade path, now real."""
+    sparse seeded random graphs AND on a 200-node chain (diameter 200); a
+    round budget too small for the chain raises instead of returning
+    partial labels."""
     import random
 
     import pytest
 
-    from dq_true_north_spark.textquality.dedup import (
-        near_dup_clusters,
-        star_contract_clusters,
-    )
-
-    def union_find_labels(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp = {}
-        for x in list(parent):
-            comp.setdefault(find(x), set()).add(x)
-        return {x: min(m) for m in comp.values() for x in m}
+    from dq_true_north_spark.textquality.dedup import star_contract_clusters
 
     for seed in (7, 8):
         rng = random.Random(seed)
         nodes = [f"n{i:03d}" for i in range(60)]
         edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(45)})
-        expected = union_find_labels(edges)
+        expected = _union_find_labels(edges)
         pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
         got = {r["doc"]: r["cluster_id"]
                for r in star_contract_clusters(pairs).collect()}
@@ -565,43 +553,20 @@ def test_star_contraction_matches_union_find_and_handles_long_chains(spark):
 
     chain = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(200)]
     pairs = spark.createDataFrame(chain, "doc_a string, doc_b string")
-    # label propagation needs diameter rounds — it must REFUSE, not silently
-    # return partial labels
+    # one round cannot collapse a 200-node chain — star contraction must
+    # REFUSE, not silently return partial labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(pairs, max_iters=4)
-    # star contraction collapses the same chain in O(log n) rounds — the
+        star_contract_clusters(pairs, max_rounds=1)
+    # with a real budget it collapses the chain in O(log n) rounds — the
     # round COUNT is measured via stats, not just implied by convergence
-    # (bench.py measures the same on a 10k chain: ~15 rounds vs 10k for
-    # propagation)
+    # (bench.py measures the same on a 10k chain: ~15 rounds)
     stats: dict = {}
     got = {r["doc"]: r["cluster_id"]
            for r in star_contract_clusters(
                pairs, max_rounds=15, stats=stats).collect()}
-    assert got == union_find_labels(chain)
+    assert got == _union_find_labels(chain)
     assert set(got.values()) == {"c0000"}
     assert stats["rounds"] <= 15, stats
-
-
-def test_star_and_label_clusters_agree_on_corpus(spark):
-    """Both cluster algorithms produce identical (doc, cluster_id) labels
-    over the real LSH candidate pairs from the synthetic corpus."""
-    from dq_true_north_spark.textquality.dedup import (
-        minhash_candidate_pairs,
-        near_dup_clusters,
-        star_contract_clusters,
-    )
-
-    pages = pages_df(spark, 1000)
-    pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text").cache()
-    try:
-        label = {(r["doc"], r["cluster_id"])
-                 for r in near_dup_clusters(pairs).collect()}
-        star = {(r["doc"], r["cluster_id"])
-                for r in star_contract_clusters(pairs).collect()}
-        assert star == label
-        assert len(star) > 0
-    finally:
-        pairs.unpersist()
 
 
 def test_bmp_resize_and_wav_features_are_real(spark):
@@ -695,22 +660,6 @@ def test_bmp_variants_decode(spark):
         _decode_bmp(hdr(h, 24, 1, 16) + bytes(16))          # RLE compressed
 
 
-def test_keep_representatives_star_algorithm_agrees(spark):
-    from dq_true_north_spark.textquality.dedup import keep_representatives
-
-    pairs = spark.createDataFrame(
-        [("b", "a"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
-    )
-    docs = spark.createDataFrame(
-        [(u, u) for u in "abcxyz"], "url string, text string"
-    )
-    via_label = {r["url"] for r in
-                 keep_representatives(docs, pairs, algorithm="label").collect()}
-    via_star = {r["url"] for r in
-                keep_representatives(docs, pairs, algorithm="star").collect()}
-    assert via_label == via_star == {"a", "x", "z"}
-
-
 def test_keep_representatives_rejects_unknown_algorithm(spark):
     import pytest as _pytest
 
@@ -718,8 +667,9 @@ def test_keep_representatives_rejects_unknown_algorithm(spark):
 
     pairs = spark.createDataFrame([("b", "a")], "doc_a string, doc_b string")
     docs = spark.createDataFrame([("a", "a")], "url string, text string")
-    with _pytest.raises(ValueError, match="label.*star|star.*label"):
-        keep_representatives(docs, pairs, algorithm="labels")
+    for name in ("label", "labels"):
+        with _pytest.raises(ValueError, match="must be 'star'"):
+            keep_representatives(docs, pairs, algorithm=name)
 
 
 def test_pq_adc_recall_and_code_shape(spark):
@@ -933,7 +883,7 @@ def test_minhash_mirror_equals_spark_pipeline(spark):
     from dq_true_north_spark.corpus import generate_pages_pdf, pages_df
     from dq_true_north_spark.textquality.dedup import (
         minhash_candidate_pairs,
-        near_dup_clusters,
+        star_contract_clusters,
     )
     from dq_true_north_spark.textquality.dedup_mirror import (
         minhash_pairs_mirror,
@@ -953,7 +903,7 @@ def test_minhash_mirror_equals_spark_pipeline(spark):
     sp_clusters = sorted(
         (r["doc"], r["cluster_id"],
          int(r["doc"] == r["cluster_id"]))
-        for r in near_dup_clusters(sp_pairs_df).collect())
+        for r in star_contract_clusters(sp_pairs_df).collect())
     assert sp_clusters == mirror_clusters
 
 

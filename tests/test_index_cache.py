@@ -166,3 +166,22 @@ def test_stale_orphaned_builds_are_swept(cache_env, monkeypatch):
     assert not os.path.exists(old)          # crash leftover reclaimed
     assert os.path.exists(fresh)            # in-flight build untouched
     assert os.path.exists(slow)             # slow-but-active build kept
+
+
+def test_package_zip_is_user_owned_and_atomic(cache_env):
+    """The executor package zip (__spark_entry__._package_zip) lives in the
+    user-owned 0700 cache root, not at a predictable shared /tmp path, and
+    its temp-then-replace write leaves no temp file behind."""
+    import zipfile
+
+    import __spark_entry__ as entry
+
+    path = entry._package_zip()
+    root = IC.cache_root()
+    assert os.path.dirname(path) == root
+    assert os.stat(path).st_uid == os.getuid()
+    assert stat.S_IMODE(os.stat(root).st_mode) == 0o700
+    with zipfile.ZipFile(path) as z:
+        assert "dq_true_north_spark/textquality/dedup.py" in z.namelist()
+    assert entry._package_zip() == path            # rewrite replaces it
+    assert os.listdir(root) == [os.path.basename(path)]

@@ -76,8 +76,8 @@ def test_window_is_oracle_dense():
 
 
 def test_star_clusters_not_registered():
-    """Star contraction is evidenced by algorithm-equality tests + the bench
-    chain entry, not by a second (identical-output) registry row."""
+    """near_dup_clusters_pages already runs star contraction; there is no
+    second (identical-output) registry row for it."""
     assert "near_dup_clusters_star_pages" not in Q.registry()
 
 
