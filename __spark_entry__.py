@@ -55,11 +55,7 @@ def _ensure_shipped(spark: SparkSession) -> None:
     shipped = getattr(_ensure_shipped, "_ids", set())
     if id(ctx) in shipped:
         return
-    zpath = _package_zip()
-    try:
-        ctx.addPyFile(zpath)
-    except Exception:
-        pass  # already added to this context
+    ctx.addPyFile(_package_zip())
     shipped.add(id(ctx))
     _ensure_shipped._ids = shipped
 

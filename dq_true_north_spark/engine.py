@@ -12,7 +12,7 @@ Reference: dq_engine.main (dq_engine.py:20-141):
 from __future__ import annotations
 
 import json
-import traceback
+import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +33,8 @@ from .rules.sql_rule import (
     execute_uniqueness_sql,
 )
 from .rules.trend import execute_sustained_trend_check
+
+log = logging.getLogger(__name__)
 
 DQ_RESULTS_SCHEMA = (
     "rule_id int, rule_name string, segment_value string, rule_type string, "
@@ -74,7 +76,7 @@ def _run_one(spark: SparkSession, rule: dict, sink) -> tuple:
         res: RuleResult = executor(spark, rule, params, sink)
     except Exception as exc:                          # isolation (:125-138)
         res = RuleResult("", C.ERROR, f"{type(exc).__name__}: {exc}")
-        rule["_traceback"] = traceback.format_exc()
+        log.exception("rule %s (%s) failed", rule["rule_id"], rule["rule_name"])
     return (
         int(rule["rule_id"]),
         rule["rule_name"],

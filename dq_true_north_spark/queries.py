@@ -3,8 +3,12 @@
 Each query is authored ONCE as a dialect-parameterized SQL template and
 rendered for Spark SQL (executed distributed via Catalyst) and DuckDB (the
 driver's correctness oracle). Queries that need the vectorized-UDF stage
-(langid, perplexity, scrub, minhash, simhash, fingerprint) register with
-oracle=None → driver records the weaker rows-only check.
+(langid, perplexity, minhash, simhash, fingerprint, hyperplane ANN) get a
+VALUES oracle instead, computed at first registry() access by an
+independent scalar mirror (tests/golden.py, dedup_mirror.py,
+similarity_mirror.py, the scalar spec paths). Only the k-means-trained ANN
+indexes and the HLL sketch demo register oracle=None → the external
+correctness check falls back to the weaker rows-only check for them.
 
 Reference parity cites are in each query's docstring (file:line into
 /root/reference/).
@@ -66,11 +70,10 @@ def registry() -> dict[str, dict]:
     the FIRST `_DRIVER_WINDOW` entries only (the round-3 lesson: 7 load-
     bearing queries silently fell past the window because order was an
     accident of file layout). `_PRIORITY` pins the window contents —
-    flagship pipeline, scrub, langid, engine run and the frozen-oracle
-    media queries first, every oracle-checked query inside, and only
-    near-redundant entries (each locally tested and named in the tail
-    comment below) after the cut. tests/test_registry_order.py enforces
-    all of this."""
+    flagship pipeline, scrub, langid and engine run first, then the
+    oracle-checked queries, and only near-redundant entries (each locally
+    tested and named in the tail comment below) after the cut.
+    tests/test_registry_order.py enforces all of this."""
     _register_spec_value_oracles()   # lazy: first access, never at import
     ordered = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
     ordered.update(
@@ -83,29 +86,16 @@ def registry() -> dict[str, dict]:
 _DRIVER_WINDOW = 50
 
 # The window contents, most load-bearing first (so even a SMALLER window
-# still covers the flagship pipeline / scrub / langid / engine / media
-# queries). Entries registered but NOT listed here form the tail — each is
+# still covers the flagship pipeline / scrub / langid / engine queries).
+# Entries registered but NOT listed here form the tail — each is
 # near-redundant with an in-window entry and keeps full local-pytest parity:
-#   minhash_pairs_pages   — exercised transitively by near_dup_clusters_pages
-#                           (both mirror-ORACLED at sf0.01 since round 5)
-#   simhash_pairs_pages   — second LSH family; planted + invariance tests
-#                           (mirror-ORACLED at sf0.01 since round 5)
-#   ann_lsh_embeddings    — second ANN family; recall tests (ann_ivf is
-#                           in-window); mirror-ORACLED at sf0.01 since r5
-#   ann_pq_embeddings     — third ANN family (product quantization); recall
-#                           + determinism tests
+#   ann_pq_embeddings / ann_ivfpq_embeddings — third and fourth ANN families
+#                           (product quantization); recall + determinism
+#                           tests; rows-only like the in-window ann_ivf
 #   host_counts_salted_vs_direct / approx_distinct_vs_exact — partitioning
 #                           demos, asserted exactly in tests (host_counts
 #                           mirror-ORACLED at sf0.01 since r5; approx HLL
 #                           sketch values are engine-specific, rows-only)
-#   token_budget_packs    — the single-reducer spec form of ..._sharded
-#   dup_orders_cust_date  — same duplicate executor as dup_details_orders
-#   doc_top_bigram_fraction — supplementary quality metric (doc_quality_score
-#                           is the §2 evidence)
-#   ngram_jaccard_pairs   — 1-row result, near-redundant with
-#                           benchmark_contamination's n-gram machinery
-#                           (swapped out in round 5 to put doc_chunks'
-#                           oracle in the driver's view — VERDICT r4 #7)
 #   doc_chunks_tokens     — token-aware twin of doc_chunks (in-window);
 #                           same explode shape, oracled, property-tested
 _PRIORITY: tuple[str, ...] = (
@@ -114,9 +104,6 @@ _PRIORITY: tuple[str, ...] = (
     "scrub_documents",
     "langid_documents",
     "dq_engine_summary",
-    "media_transforms_sample",
-    "audio_features_sample",
-    "media_meta_pages",
     "doc_fingerprints",
     "doc_metrics",
     "doc_drop_flags",
@@ -158,6 +145,9 @@ _PRIORITY: tuple[str, ...] = (
     "canonical_urls",
     "benchmark_contamination",
     "near_dup_clusters_pages",
+    "minhash_pairs_pages",
+    "simhash_pairs_pages",
+    "ann_lsh_embeddings",
     "ann_ivf_embeddings",
 )
 
@@ -439,30 +429,6 @@ SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
 FROM ranked WHERE rn <= 5"""
 
 
-@sql_query("token_budget_packs")
-def q_token_budget_packs(d: str) -> str:
-    """Sequence-pack planning: assign documents to fixed token-budget packs
-    (LLM pretraining batches) by running cumulative token count — pack_id =
-    floor(tokens_before_this_doc / budget). Deterministic doc_id order; the
-    window SUM is CAST BIGINT in both dialects (the round-1 HUGEINT
-    lesson). The global ORDER BY window funnels one reducer — this form is
-    the oracle-checkable SPEC; token_budget_packs_sharded below is the
-    at-scale implementation (per-shard windows + offset ids) and is the
-    driver-window entry."""
-    bpe = spec.bpe_token_count(d, "text")
-    return f"""
-WITH t AS (
-  SELECT doc_id, CAST({bpe} AS BIGINT) AS tokens FROM documents
-)
-SELECT doc_id, tokens,
-       CAST(FLOOR(
-         CAST(SUM(tokens) OVER (ORDER BY doc_id
-                                ROWS UNBOUNDED PRECEDING) - tokens AS DOUBLE)
-         / 2048.0
-       ) AS BIGINT) AS pack_id
-FROM t"""
-
-
 @sql_query("token_budget_packs_sharded")
 def q_token_budget_packs_sharded(d: str) -> str:
     """Sequence-pack planning AT SCALE (VERDICT r3 next #3): the running
@@ -476,9 +442,10 @@ def q_token_budget_packs_sharded(d: str) -> str:
     aggregate, broadcast back by the join. All-integer math end-to-end
     (BIGINT sums are exact; the /2048.0 numerator is an exact
     integer-valued double far below 2^53), so the result is deterministic
-    at any partitioning and oracle-checkable. Same greedy boundary rule as
-    the global spec form: a doc belongs to the pack its starting offset
-    falls in."""
+    at any partitioning and oracle-checkable. Pack boundary rule: within
+    a shard, a doc belongs to the 2048-token pack its starting offset (the
+    shard's running token count before it, in doc_id order) falls in, so
+    a doc that crosses a boundary stays whole in the pack it starts in."""
     bpe = spec.bpe_token_count(d, "text")
     return f"""
 WITH t AS (
@@ -792,19 +759,6 @@ SELECT 'orders_cust_date_dups' AS rule_name,
        COUNT(*) AS duplicate_count
 FROM orders
 GROUP BY 2
-HAVING COUNT(*) > 1"""
-
-
-@sql_query("dup_orders_cust_date")
-def q_dup_orders(d: str) -> str:
-    """execute_duplicate_check semantics (dq_rules_library.py:280-369):
-    group by normalized key columns, keep groups with count > 1."""
-    return f"""
-SELECT o_custkey,
-       CAST(CAST(o_orderdate AS DATE) AS {_str_t(d)}) AS order_date,
-       COUNT(*) AS duplicate_count
-FROM orders
-GROUP BY o_custkey, CAST(CAST(o_orderdate AS DATE) AS {_str_t(d)})
 HAVING COUNT(*) > 1"""
 
 
@@ -1157,36 +1111,6 @@ FROM documents
 GROUP BY ROLLUP(lang, source)"""
 
 
-@sql_query("doc_top_bigram_fraction")
-def q_top_bigram_fraction(d: str) -> str:
-    """Gopher repetition rule: fraction of the document occupied by its most
-    frequent word 2-gram. Explode/unnest → per-(doc, gram) count → max per
-    doc — two partial-aggregated shuffles, no O(L²) per-row work."""
-    w = spec.words(d, "lower(text)")
-    grams = spec.word_ngrams(d, w, 2)
-    if d == SPARK:
-        from_clause = f"FROM documents LATERAL VIEW explode({grams}) g AS gram"
-    else:
-        from_clause = f"FROM documents, unnest({grams}) AS t(gram)"
-    return f"""
-WITH exploded AS (
-  SELECT doc_id, gram {from_clause}
-), per_gram AS (
-  SELECT doc_id, gram, COUNT(*) AS c FROM exploded GROUP BY doc_id, gram
-), per_doc AS (
-  SELECT doc_id, MAX(c) AS top_count, CAST(SUM(c) AS BIGINT) AS total_grams
-  FROM per_gram GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST(top_count AS BIGINT) AS top_count,
-       total_grams,
-       (floor((CAST(top_count AS DOUBLE) / nullif(total_grams, 0)) * 1e4 + 0.5) / 1e4)
-           AS top_bigram_fraction,
-       CAST(CASE WHEN CAST(top_count AS DOUBLE) / nullif(total_grams, 0) > 0.20
-            THEN 1 ELSE 0 END AS INT) AS is_repetitive
-FROM per_doc"""
-
-
 @df_query("host_counts_salted_vs_direct")
 def q_salted_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew discipline demo on the hot-host corpus: per-host page counts via
@@ -1419,33 +1343,6 @@ _REGISTRY["cosine_topk_embeddings"] = {
     "oracle": q_cosine_topk(DUCK),
     "template": q_cosine_topk,   # spec of record; guard-scanned
 }
-
-
-@sql_query("ngram_jaccard_pairs")
-def q_ngram_jaccard(d: str) -> str:
-    """Word-3-gram Jaccard near-dup pairs, blocked by source to bound the
-    pair space (at corpus scale the blocking key is the LSH band instead —
-    see textquality/dedup.py)."""
-    w = spec.words(d, "lower(text)")
-    grams = spec.word_ngrams(d, w, 3)
-    if d == SPARK:
-        sh = f"array_distinct({grams})"
-        inter = "size(array_intersect(a.sh, b.sh))"
-        sz = "size"
-    else:
-        sh = f"list_distinct({grams})"
-        inter = "len(list_intersect(a.sh, b.sh))"
-        sz = "len"
-    return f"""
-WITH sh AS (
-  SELECT doc_id, source, {sh} AS sh FROM documents
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       (floor((CAST({inter} AS DOUBLE) /
-             nullif({sz}(a.sh) + {sz}(b.sh) - {inter}, 0)) * 1e4 + 0.5) / 1e4) AS jaccard
-FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
-WHERE CAST({inter} AS DOUBLE) /
-      nullif({sz}(a.sh) + {sz}(b.sh) - {inter}, 0) >= 0.10"""
 
 
 def q_embedding_near_dup(d: str) -> str:
@@ -1814,119 +1711,6 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@df_query("media_meta_pages")
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary column → mapInPandas metadata extraction.
-    Header fields (byte_len, format, PNG/GIF/JPEG dimensions) are parsed for
-    real; codec-dependent decode is honestly NULL (multimodal.py). The
-    offsets array is serialized to JSON — the driver's pandas
-    canonicalization cannot sort raw list cells (round-1 err)."""
-    from pyspark.sql import functions as F
-
-    from .corpus import pages_df
-    from .textquality.multimodal import decode_media_meta
-
-    pages = pages_df(spark, 2_000)
-    meta = decode_media_meta(pages, binary_col="html")
-    return meta.select(
-        "url", "byte_len", "format", "width", "height", "n_frames",
-        F.to_json("sample_frame_offsets").alias("sample_frame_offsets_json"),
-        "decoder",
-    )
-
-
-@df_query(
-    "media_transforms_sample",
-    oracle="""
-SELECT url, op, status, CAST(out_byte_len AS BIGINT) AS out_byte_len
-FROM (VALUES
-  ('media://bmp',  'passthrough',  'ok',          134),
-  ('media://wav',  'passthrough',  'ok',          16044),
-  ('media://gif',  'passthrough',  'ok',          122),
-  ('media://png',  'passthrough',  'ok',          193),
-  ('media://jpeg', 'passthrough',  'ok',          640),
-  ('media://html', 'passthrough',  'ok',          35),
-  ('media://bmp',  'resize',       'ok',          78),
-  ('media://wav',  'resize',       'unsupported', NULL),
-  ('media://gif',  'resize',       'ok',          42),
-  ('media://png',  'resize',       'ok',          85),
-  ('media://jpeg', 'resize',       'ok',          659),
-  ('media://html', 'resize',       'unsupported', NULL),
-  ('media://bmp',  'frame_sample', 'unsupported', NULL),
-  ('media://wav',  'frame_sample', 'unsupported', NULL),
-  ('media://gif',  'frame_sample', 'ok',          74),
-  ('media://png',  'frame_sample', 'unsupported', NULL),
-  ('media://jpeg', 'frame_sample', 'unsupported', NULL),
-  ('media://html', 'frame_sample', 'unsupported', NULL),
-  ('media://bmp',  'resample',     'unsupported', NULL),
-  ('media://wav',  'resample',     'ok',          8044),
-  ('media://gif',  'resample',     'unsupported', NULL),
-  ('media://png',  'resample',     'unsupported', NULL),
-  ('media://jpeg', 'resample',     'unsupported', NULL),
-  ('media://html', 'resample',     'unsupported', NULL)
-) t(url, op, status, out_byte_len)""",
-)
-def q_media_transforms_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Media transforms over the frozen sample-media set — every image
-    format's pixel path is now REAL: BMP (raw bytes), PNG (stdlib-zlib
-    inflate + unfilter), GIF (LZW implemented outright) and baseline JPEG
-    (huffman + DCT in pure numpy, textquality/jpeg.py) all decode ->
-    nearest-neighbor resize -> re-encode. Round-4 deliberate frozen-oracle
-    updates: png 33->193 / resize ok/85; gif 106->122 (real LZW pixels) /
-    frame_sample 60->74 / resize ok/42; jpeg 41->640 (real baseline
-    stream) / resize ok/659; resample rows added (PCM16 WAV linear
-    resample to 4 kHz -> ok/8044, the audio analog of resize). GIF
-    container-level frame sampling emits a valid 2-frame GIF; non-audio
-    resample and non-GIF frame_sample stay honestly 'unsupported'. The
-    oracle is a FROZEN literal table (hand-audited expected outputs, not
-    recomputed) — any behavior drift in the binary paths fails the
-    hash."""
-    from functools import reduce
-
-    from .textquality.multimodal import sample_media_df, transform_media
-
-    media = sample_media_df(spark)
-    parts = [
-        transform_media(media, "html", op="passthrough"),
-        transform_media(media, "html", op="resize", width=3, height=2),
-        transform_media(media, "html", op="frame_sample", n_frames=2),
-        transform_media(media, "html", op="resample", rate=4000),
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts).select(
-        "url", "op", "status", "out_byte_len"
-    )
-
-
-@df_query(
-    "audio_features_sample",
-    oracle="""
-SELECT url, CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_channels AS INT) AS n_channels,
-       CAST(n_samples AS BIGINT) AS n_samples,
-       CAST(duration_s AS DOUBLE) AS duration_s,
-       CAST(rms AS DOUBLE) AS rms, CAST(peak AS DOUBLE) AS peak, status
-FROM (VALUES
-  ('media://bmp',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://wav',  8000, 1, 8000, 1.0, 0.353539, 0.5, 'ok'),
-  ('media://gif',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://png',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://jpeg', NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://html', NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported')
-) t(url, sample_rate, n_channels, n_samples, duration_s, rms, peak, status)""",
-)
-def q_audio_features_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCM16 WAV feature extraction (duration / RMS / peak via numpy over
-    raw samples — codec-free by format design) over the frozen sample-media
-    set; non-PCM rows degrade per-row to 'unsupported'. Frozen-literal
-    oracle, same discipline as media_transforms_sample."""
-    from .textquality.multimodal import extract_audio_features, sample_media_df
-
-    return extract_audio_features(sample_media_df(spark), "html").select(
-        "url", "sample_rate", "n_channels", "n_samples",
-        "duration_s", "rms", "peak", "status",
-    )
-
-
 # ===================================================== corpus pipeline =====
 
 
@@ -1997,7 +1781,8 @@ def q_pages_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @df_query("langid_documents")
 def q_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID agreement between the hashed-char-trigram model and the
-    documents table's lang label (model-based → rows-only check)."""
+    documents table's lang label (model-based; its sf0.01 oracle is the
+    scalar langmodel.classify VALUES table, _register_spec_value_oracles)."""
     from pyspark.sql import functions as F
 
     from .session import load_tables as _lt
@@ -2017,44 +1802,6 @@ def q_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _spec_oracles_done = False
-
-
-def _register_media_meta_oracle() -> None:
-    """media_meta_pages upgraded from rows-only: the corpus generator is
-    pure Python and per-index seeded, so the expected metadata for its
-    2,000 pages is computed driver-side (plain pandas rows → _meta_one)
-    and frozen into a VALUES oracle. What this actually verifies is the
-    DISTRIBUTED half — mapInPandas scheduling, Arrow binary-column round
-    trip, batch boundaries — against a no-Spark reference of the same
-    parser; the parser itself is additionally pinned by the frozen-literal
-    sample-media oracle and unit tests. sf-independent (the query always
-    reads 2,000 generated pages)."""
-    from .corpus import generate_pages_pdf
-    from .textquality.multimodal import _meta_one
-
-    import json as _json
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    rows = []
-    pdf = generate_pages_pdf(2_000)
-    for url, blob in zip(pdf["url"], pdf["html"]):
-        (u, blen, fmt, w, h, nf, offs, dec) = _meta_one(url, bytes(blob))
-        rows.append(
-            f"('{esc(u)}', {blen}, '{esc(fmt)}', "
-            f"{'NULL' if w is None else w}, {'NULL' if h is None else h}, "
-            f"{'NULL' if nf is None else nf}, "
-            f"'{esc(_json.dumps(offs, separators=(',', ':')))}', '{esc(dec)}')"
-        )
-    _REGISTRY["media_meta_pages"]["oracle"] = (
-        "SELECT url, CAST(byte_len AS BIGINT) AS byte_len, format, "
-        "CAST(width AS INT) AS width, CAST(height AS INT) AS height, "
-        "CAST(n_frames AS INT) AS n_frames, sample_frame_offsets_json, "
-        "decoder "
-        f"FROM (VALUES {', '.join(rows)}) t(url, byte_len, format, width, "
-        "height, n_frames, sample_frame_offsets_json, decoder)"
-    )
 
 
 def _register_pages_verdicts_oracle(pages_pdf) -> None:
@@ -2266,8 +2013,6 @@ def _register_spec_value_oracles() -> None:
     _spec_oracles_done = True
     import os
 
-    _register_media_meta_oracle()   # corpus-derived, sf-independent
-
     sf_dir = os.environ.get("DQ_TEST_SF_DIR", "/root/testdata/sf0.01")
     if "0.01" in sf_dir:
         from .corpus import generate_pages_pdf
@@ -2353,8 +2098,9 @@ def _engine_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .engine import run_catalog
 
     load_tables(spark, sf_dir, TABLES)
-    rules = [dict(r) for r in DEFAULT_CATALOG]
-    return run_catalog(spark, rules, sink=None, write_summary=False).select(
+    return run_catalog(
+        spark, DEFAULT_CATALOG, sink=None, write_summary=False
+    ).select(
         "rule_id", "rule_name", "rule_type", "result_value", "indicator"
     )
 

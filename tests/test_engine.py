@@ -8,6 +8,7 @@ makes rule bugs visible as ERROR rows instead of crashing the run
 from __future__ import annotations
 
 import json
+import logging
 
 import pytest
 
@@ -59,9 +60,10 @@ def test_append_only_double_run(spark, sink):
     assert n2 == n1 + 1
 
 
-def test_error_isolation(spark):
+def test_error_isolation(spark, caplog):
     """A broken rule yields an ERROR row; later rules still run
-    (dq_engine.py:125-138)."""
+    (dq_engine.py:125-138). The traceback goes to the engine's logger, and
+    the caller's rule dicts come back unchanged."""
     load_tables(spark, SF_DIR, TABLES)
     bad = {
         "rule_id": 99, "rule_name": "broken_sql", "rule_type": "GENERIC",
@@ -70,11 +72,21 @@ def test_error_isolation(spark):
         "parameters": "{}", "segment_value": "", "is_active": True,
     }
     good = dict(DEFAULT_CATALOG[2])
-    summary = run_catalog(spark, [bad, good], write_summary=False)
+    before = [dict(bad), dict(good)]
+    with caplog.at_level(logging.ERROR, logger="dq_true_north_spark.engine"):
+        summary = run_catalog(spark, [bad, good], write_summary=False)
     rows = {r["rule_name"]: r for r in summary.collect()}
     assert rows["broken_sql"]["indicator"] == C.ERROR
     assert rows["broken_sql"]["error_message"] != ""
     assert rows["customer_acctbal_negative"]["indicator"] in (C.PASS, C.FAIL)
+    assert [bad, good] == before
+
+    logged = [r for r in caplog.records
+              if r.name == "dq_true_north_spark.engine"]
+    assert len(logged) == 1
+    assert "broken_sql" in logged[0].getMessage()
+    assert logged[0].exc_info is not None
+    assert "table_that_does_not_exist" in caplog.text
 
 
 def test_verdict_trichotomy(spark):
